@@ -161,10 +161,19 @@ def main() -> None:
     # samples when the existing ones are provably contaminated.
     STEAL_RETRY_FRAC = float(os.environ.get("SPARK_GRAFT_STEAL_FRAC", "0.015"))
     STEAL_RETRY_MAX = int(os.environ.get("SPARK_GRAFT_STEAL_RETRIES", "3"))
-    # /proc/stat's cpu line aggregates over every host-visible CPU, so
-    # the jiffy capacity basis is the machine's CPU count, not the
-    # (possibly lower) Spark core count.
-    ncpu = os.cpu_count() or int(cpus)
+    # /proc/stat's cpu line aggregates over the CPUs it lists as cpuN
+    # lines, so the jiffy capacity basis is that count — the counter's
+    # own scope — not os.cpu_count() (which can disagree under CPU
+    # hotplug or a container view) nor the Spark core count.
+    def stat_cpus() -> int:
+        try:
+            with open("/proc/stat") as fh:
+                return sum(1 for line in fh
+                           if line.startswith("cpu") and line[3].isdigit())
+        except OSError:
+            return 0
+
+    ncpu = stat_cpus() or os.cpu_count() or int(cpus)
 
     def steal_frac(elapsed: float, steal: int) -> float:
         cap = max(elapsed, 1e-9) * ncpu * 100.0

@@ -58,11 +58,17 @@ _SLOW_NAME_PARTS = (
 )
 
 
+# One fast ``test_smoke_*`` per slow-only file stays in the default
+# tier, so every module is touched by the default run.
+_DEFAULT_TIER_PREFIX = "test_smoke_"
+
+
 def pytest_collection_modifyitems(config, items):
     for item in items:
         fname = os.path.basename(str(item.fspath))
-        if fname in _SLOW_FILES or any(p in item.name
-                                       for p in _SLOW_NAME_PARTS):
+        slow_file = (fname in _SLOW_FILES
+                     and not item.name.startswith(_DEFAULT_TIER_PREFIX))
+        if slow_file or any(p in item.name for p in _SLOW_NAME_PARTS):
             item.add_marker(pytest.mark.slow)
 
 

@@ -80,6 +80,21 @@ def _run(spark, values, col_fn):
     return [r.out for r in df.select(col_fn(F.col("s")).alias("out")).collect()]
 
 
+def test_smoke_lenient_casts_fixed_cases(spark):
+    """Default-tier smoke of the three properties below on one fixed
+    list: plain, fractional, saturating, currency, junk, empty and
+    NULL inputs."""
+    values = ["42", "-7.9", "3000000000", "$1,234.75", "EUR 1,000",
+              "12abc", "", " 8 ", None]
+    assert _run(spark, values, fc.lenient_int) == \
+        [model_int(v) for v in values]
+    assert _run(spark, values, fc.lenient_currency_double) == \
+        pytest.approx([model_currency_double(v) for v in values])
+    assert _run(spark, values,
+                lambda c: fc.with_default(fc.lenient_int(c), "int")) == \
+        [model_int(v) if model_int(v) is not None else 0 for v in values]
+
+
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(values=cases)

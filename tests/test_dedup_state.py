@@ -24,6 +24,27 @@ def _ids(df):
     return sorted(r.doc_id for r in df.collect())
 
 
+def test_smoke_seen_filter_commit_then_recover(spark, tmp_path):
+    """Default-tier smoke: a committed batch filters its repeats, a
+    batch whose sink failed (commit never called) leaves the store
+    untouched, and its rerun ships the same survivors and commits."""
+    store = str(tmp_path / "seen")
+    b1, c1 = seen_filter(_docs(spark, [(1, "aa"), (2, "bb")]),
+                         store, ["text"], num_buckets=2)
+    assert _ids(b1) == [1, 2]
+    c1()
+    b2, _crashed = seen_filter(_docs(spark, [(3, "aa"), (4, "cc")]),
+                               store, ["text"], num_buckets=2)
+    assert _ids(b2) == [4]
+    b2r, c2r = seen_filter(_docs(spark, [(3, "aa"), (4, "cc")]),
+                           store, ["text"], num_buckets=2)
+    assert _ids(b2r) == [4]
+    c2r()
+    b3, _ = seen_filter(_docs(spark, [(5, "cc")]), store, ["text"],
+                        num_buckets=2)
+    assert _ids(b3) == []
+
+
 def test_seen_filter_across_batches(spark, tmp_path):
     store = str(tmp_path / "seen")
     b1, c1 = seen_filter(_docs(spark, [(1, "aa"), (2, "bb")]),

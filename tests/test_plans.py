@@ -587,8 +587,8 @@ def test_outlier_iqr_broadcasts_stats_back(spark):
     p = plan_str(QUERIES["ts_outlier_iqr"](spark, SF_DIR))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
-    assert "LocalTableScan" in p or "Scan ExistingRDD" in p, \
-        "quartiles are not a literal frame"
+    assert "LocalTableScan" in p, "quartiles are not a literal frame"
+    assert "ExistingRDD" not in p, "quartiles are a Python-scan frame"
     assert "percentile" not in p.lower(), \
         "unbounded percentile aggregate is back in the plan"
 
@@ -600,8 +600,8 @@ def test_rfm_cutoffs_are_one_row_broadcast(spark):
     window over the per-customer rows anywhere in the plan."""
     p = plan_str(QUERIES["events_rfm_segments"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
-    assert "LocalTableScan" in p or "Scan ExistingRDD" in p, \
-        "cutoffs are not a literal frame"
+    assert "LocalTableScan" in p, "cutoffs are not a literal frame"
+    assert "ExistingRDD" not in p, "cutoffs are a Python-scan frame"
     assert "percentile" not in p.lower(), \
         "unbounded percentile aggregate is back in the plan"
     assert "Window" not in p

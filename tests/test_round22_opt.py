@@ -158,8 +158,10 @@ def test_grouped_dispatch_partitioning_pinned(spark):
     assert "RepartitionByExpression" in p, p
     p2 = QUERIES["cogroup_asof_merge"](spark, SF)._jdf \
         .queryExecution().executedPlan().toString()
-    assert p2.count("Exchange") == 2, p2  # one per cogroup side
-    assert "REPARTITION_BY_NUM" in p2, p2
+    # exactly one keyed REPARTITION_BY_NUM per cogroup side, and no
+    # exchange of any other kind
+    assert p2.count("REPARTITION_BY_NUM") == 2, p2
+    assert p2.count("Exchange ") == 2, p2
 
 
 def test_grouped_spread_scale_posture(spark):

@@ -77,6 +77,31 @@ def _totals(spark, target):
 # upsert
 # ---------------------------------------------------------------------------
 
+def test_smoke_agg_state_commit_crash_replay(spark, target, monkeypatch):
+    """Default-tier smoke of the pointer-CAS commit: batch 1 commits;
+    batch 2 dies before any pointer CAS, so readers (the distributed
+    ``read_objects`` fetch) still see batch 1 only; the replay applies
+    batch 2 exactly once."""
+    agg_state_merge_s3(_frame(spark, [(1, 0, 1.0), (2, 0, 2.0)]), 1,
+                       target=target, keys=["user_id"], value_col="value")
+    assert _totals(spark, target) == {1: (1, 1.0), 2: (1, 2.0)}
+
+    def crash(self, *a, **kw):
+        raise RuntimeError("injected crash before CAS")
+
+    b2 = _frame(spark, [(1, 0, 10.0), (3, 0, 3.0)])
+    with monkeypatch.context() as m:
+        m.setattr(S3StateTarget, "commit_pointer", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            agg_state_merge_s3(b2, 2, target=target, keys=["user_id"],
+                               value_col="value")
+    assert _totals(spark, target) == {1: (1, 1.0), 2: (1, 2.0)}
+    agg_state_merge_s3(b2, 2, target=target, keys=["user_id"],
+                       value_col="value")
+    assert _totals(spark, target) == {
+        1: (2, 11.0), 2: (1, 2.0), 3: (1, 3.0)}
+
+
 def test_upsert_keep_latest_across_merges(spark, target):
     upsert_merge_s3(_frame(spark, [(1, 10, 1.0), (2, 10, 2.0)]), 1,
                     target=target, keys=["user_id"], order_col="ord")

@@ -60,6 +60,28 @@ def _seed_store(spark, store) -> None:
 # POSIX: primitive + wiring
 # ---------------------------------------------------------------------------
 
+def test_smoke_posix_commit_refused_then_recovers(spark, tmp_path):
+    """Default-tier smoke: a commit under a held maintenance lease is
+    refused with the store unchanged; once the lease is released the
+    rerun commits and its content filters as seen."""
+    store = str(tmp_path / "seen")
+    _seed_store(spark, store)
+    survivors, commit = seen_filter(
+        _docs(spark, [(3, "cc")]), store, ["text"], num_buckets=4)
+    assert _ids(survivors) == [3]
+    with posix_maintenance_lease(store):
+        with pytest.raises(StoreLeaseHeld):
+            commit()
+    rerun, commit2 = seen_filter(
+        _docs(spark, [(3, "cc")]), store, ["text"], num_buckets=4)
+    assert _ids(rerun) == [3]
+    commit2()
+    after, _ = seen_filter(
+        _docs(spark, [(4, "cc"), (5, "aa")]), store, ["text"],
+        num_buckets=4)
+    assert _ids(after) == []
+
+
 def test_posix_lease_excludes_second_lease(tmp_path):
     store = str(tmp_path / "seen")
     with posix_maintenance_lease(store):

@@ -42,11 +42,12 @@ key bytes (the exact public algorithm from
 mod partition count; a null key falls to round-robin over partitions.
 
 Scale posture: the loopback is sandbox-sized by design — the listing
-is bounded metadata (topic partitions), and record bytes flow through
-``mapInPandas`` slice reads on executors (the ``_s3_source_boto3``
-pattern), never through the driver; but a directory on one filesystem
-is not a distributed log, and nothing here replaces the Kafka
-connector at scale.
+is bounded metadata (topic partitions) that the source ships as a
+local relation (one partition per slice, up to defaultParallelism),
+and record bytes flow through ``mapInPandas`` slice reads on executors
+in that same stage (the ``_s3_source_boto3`` pattern), never through
+the driver; but a directory on one filesystem is not a distributed
+log, and nothing here replaces the Kafka connector at scale.
 """
 
 from __future__ import annotations

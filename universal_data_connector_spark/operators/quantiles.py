@@ -64,6 +64,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from universal_data_connector_spark.session import local_frame
+
 _LOW_BITS = (1 << 33) - 1  # monotonically_increasing_id layout
 
 _CACHED_PART_CONF = \
@@ -223,7 +225,7 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
                 out_schema = T.StructType(
                     list(df.select(*g).schema.fields) +
                     [T.StructField(c, T.DoubleType()) for c in out_cols])
-                out = spark.createDataFrame(rows, out_schema)
+                out = local_frame(spark, rows, out_schema)
                 return out.drop("__g") if const else out
     if persist_input:
         vals = vals.persist(StorageLevel.DISK_ONLY)
@@ -324,14 +326,14 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
         if not wanted:
             out_fields = g_fields + [
                 T.StructField(c, T.DoubleType()) for c in out_cols]
-            empty = spark.createDataFrame([], T.StructType(out_fields))
+            empty = local_frame(spark, [], T.StructType(out_fields))
             return empty.drop("__g") if const else empty
 
         loc_schema = T.StructType(g_fields + [
             T.StructField("__pid", T.LongType()),
             T.StructField("__pofs", T.LongType()),
             T.StructField("__sides", T.ArrayType(T.StringType()))])
-        loc = spark.createDataFrame(wanted, loc_schema)
+        loc = local_frame(spark, wanted, loc_schema)
         # ONE pass over the sorted data picks every endpoint
         picked = (indexed.join(F.broadcast(loc),
                                on=[*g, "__pid", "__pofs"])
@@ -366,5 +368,5 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
         out_rows.append((*gkey, *qs))
     out_schema = T.StructType(g_fields + [
         T.StructField(c, T.DoubleType()) for c in out_cols])
-    out = spark.createDataFrame(out_rows, out_schema)
+    out = local_frame(spark, out_rows, out_schema)
     return out.drop("__g") if const else out

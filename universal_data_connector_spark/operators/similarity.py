@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from universal_data_connector_spark.functions.vectors import cosine_similarity
 from universal_data_connector_spark.operators.relational import spread, top_k_per_group
+from universal_data_connector_spark.session import local_frame
 
 
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -96,8 +97,8 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16,
                    .filter(F.col("features").isNotNull()))
     model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(train)
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    return corpus.sparkSession.createDataFrame(
-        rows, f"centroid_id int, {vec_col} array<double>")
+    return local_frame(corpus.sparkSession, rows,
+                       f"centroid_id int, {vec_col} array<double>")
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -155,7 +156,7 @@ def cosine_topk_pandas(queries: DataFrame, corpus: DataFrame, k: int = 5,
     if not qrows:
         # np.linalg.norm on a 0-row matrix raises AxisError; an empty
         # query set is simply an empty result, like brute_force_topk
-        empty = queries.sparkSession.createDataFrame([], out_schema)
+        empty = local_frame(queries.sparkSession, [], out_schema)
         return top_k_per_group(
             empty, ["query_id"],
             [F.col("cosine").desc(), F.col("neighbor_id").asc()],
@@ -171,7 +172,7 @@ def cosine_topk_pandas(queries: DataFrame, corpus: DataFrame, k: int = 5,
     live = (qn > 0).reshape(-1)
     qids, qmat, qn = qids[live], qmat[live], qn[live]
     if not len(qids):
-        empty = queries.sparkSession.createDataFrame([], out_schema)
+        empty = local_frame(queries.sparkSession, [], out_schema)
         return top_k_per_group(
             empty, ["query_id"],
             [F.col("cosine").desc(), F.col("neighbor_id").asc()],

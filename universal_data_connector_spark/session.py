@@ -94,3 +94,38 @@ def temp_view(df, base: str):
         yield name
     finally:
         df.sparkSession.catalog.dropTempView(name)
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """A driver-side row list as a JVM local relation.
+
+    ``rows`` are tuples (or Rows/dicts) in ``schema`` order; ``schema``
+    is a DDL string or StructType. The rows go to the JVM as one Arrow
+    table and plan as ``LocalTableScan``, split into
+    min(len(rows), defaultParallelism) partitions. The list form of
+    ``createDataFrame`` plans as ``Scan ExistingRDD`` instead: a Python
+    worker stage that re-pickles the rows on every action scanning
+    them — fixed per-job cost that outweighs the rows themselves.
+
+    Values are converted with ``schema.toInternal``, exactly as the
+    list form converts them, so both routes yield the same instants: a
+    naive ``datetime`` for a TIMESTAMP column is process-local wall
+    time (``time.mktime``), not session-zone wall time as a naive Arrow
+    timestamp would be. Two divergences: a Decimal with more fractional
+    digits than its column's scale raises here, where the list form
+    rounds it half-up; and with pyarrow < 17 a NULL map whose keys or
+    values are timestamps or nested types reads back as an empty map
+    (PySpark rebuilds such maps without their null mask, SPARK-48302)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    columns = list(zip(*internal)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.session import local_frame
+
 
 def sniff_file_type(path: Column, first_line: Column | None = None) -> Column:
     """CSV/TEXT for text-ish files (``FileSourceContext.java:58-67``:
@@ -173,8 +175,7 @@ def manifest_record(files: list[str], manifest_dir: str,
     os.makedirs(manifest_dir, exist_ok=True)
     this_run = sorted({canonical_file_uri(f) for f in files})
     if spark is not None:
-        new_df = spark.createDataFrame(
-            [(u,) for u in this_run], "uri string")
+        new_df = local_frame(spark, [(u,) for u in this_run], "uri string")
         # the dir exists (just ensured); an empty/logless dir is an
         # empty frame for the fixed-schema text format, not an error
         seen_df = (spark.read.format("text")
@@ -353,6 +354,13 @@ def _s3_source_boto3(spark: SparkSession, props: dict) -> DataFrame:
     would not; use a trailing ``/`` in the prefix to get directory
     semantics on both paths.
 
+    The listed keys become a local relation (``session.local_frame``):
+    min(keys, defaultParallelism) partitions, so the ``mapInPandas``
+    GETs run in the scan's own stage with no exchange in front. Only a
+    ``manifestDir`` anti-join between the key list and the fetch
+    re-spreads the surviving keys, since the join sets its own output
+    partitioning.
+
     Credential posture (ADVICE r9, documented divergence): when the
     YAML supplies ``accessKey``/``secretKey`` they ride to executors
     inside the ``mapInPandas`` task closure — in-band, unlike the S3A
@@ -389,17 +397,19 @@ def _s3_source_boto3(spark: SparkSession, props: dict) -> DataFrame:
             keys.append(key)
     keys.sort()
 
-    kdf = spark.createDataFrame(
-        [(f"s3a://{bucket}/{k}",) for k in keys], "source_file string")
+    kdf = local_frame(
+        spark, [(f"s3a://{bucket}/{k}",) for k in keys], "source_file string")
     if props.get("manifestDir"):
         # anti-join the KEY frame, before any fetch: already-consumed
         # objects must not be re-downloaded on every run just to be
         # dropped afterwards (unbounded transfer growth on a long-
         # lived drop prefix)
         kdf = manifest_filter(kdf, spark, props["manifestDir"])
-    if keys:
-        kdf = kdf.repartition(
-            min(len(keys), spark.sparkContext.defaultParallelism))
+        if keys:
+            # the join's output partitioning is not the local scan's:
+            # spread the surviving keys over the fetch tasks again
+            kdf = kdf.repartition(
+                min(len(keys), spark.sparkContext.defaultParallelism))
 
     uri_prefix = f"s3a://{bucket}/"
 

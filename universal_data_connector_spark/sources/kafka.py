@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.session import local_frame
+
 
 def kafka_reader_options(props: dict) -> dict:
     """Reference consumer-config mapping (``KafkaSourceContext.java:
@@ -60,8 +62,11 @@ def _kafka_source_loopback(spark: SparkSession, props: dict) -> DataFrame:
     the reference's consumer-loop body (``KafkaSourceContext.java:
     48-56``) as a batch read, the way ``_s3_source_boto3`` mirrors the
     S3 listing loop: bounded (topic, partition, start, end) slice
-    metadata at the driver, record bytes fetched executor-side via
-    ``mapInPandas``, then the SAME ``project_kafka`` projection as the
+    metadata at the driver, shipped as a local relation
+    (``session.local_frame``: min(slices, defaultParallelism)
+    partitions, no Python stage and no exchange in front of the
+    fetch), record bytes fetched executor-side via ``mapInPandas`` in
+    that one stage, then the SAME ``project_kafka`` projection as the
     real connector.
 
     Offset semantics mirror a consumer group: a ``groupId``'s
@@ -95,11 +100,8 @@ def _kafka_source_loopback(spark: SparkSession, props: dict) -> DataFrame:
             start = end if reset == "latest" else 0
         slices.append((topic, p, start, end))
 
-    sdf = spark.createDataFrame(
-        slices, "topic string, partition int, start long, end long")
-    if slices:
-        sdf = sdf.repartition(min(
-            len(slices), spark.sparkContext.defaultParallelism))
+    sdf = local_frame(
+        spark, slices, "topic string, partition int, start long, end long")
 
     def fetch(batches):
         from universal_data_connector_spark import kafka_loopback as kl

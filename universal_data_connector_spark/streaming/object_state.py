@@ -68,6 +68,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from universal_data_connector_spark.session import local_frame
+
 _KB = "udc_kb"                      # same bucket column as the POSIX twin
 _META_KEY = "_udc_buckets"
 _INTENT_KEY = "_udc_batch_intent"
@@ -282,7 +284,10 @@ def read_objects(spark, target: S3StateTarget,
     ``mapInArrow`` task GETs each object via its own boto3 client and
     yields its record batches — the data never touches the driver (the
     ``sources/files.py`` ``_s3_source_boto3`` posture, Arrow-native so
-    decimals/arrays/timestamps survive byte-faithfully).
+    decimals/arrays/timestamps survive byte-faithfully). The object
+    list is a local relation (``session.local_frame``) of
+    min(objects, defaultParallelism) partitions, so the GETs run in the
+    scan's own stage: no Python stage and no exchange per read.
 
     ``keyed_objects`` is ``[(object_key, bucket_id), ...]`` (bounded:
     the caller's touched-bucket listings). ``schema`` (DDL string or
@@ -314,9 +319,7 @@ def read_objects(spark, target: S3StateTarget,
     bucket = target.bucket
     client_kwargs = dict(target.client_kwargs)
 
-    kdf = spark.createDataFrame(keyed_objects, "key string, udc_kb int")
-    kdf = kdf.repartition(min(max(len(keyed_objects), 1),
-                              spark.sparkContext.defaultParallelism))
+    kdf = local_frame(spark, keyed_objects, "key string, udc_kb int")
 
     def fetch(batches):
         import io
@@ -610,7 +613,7 @@ def read_state_s3(spark, target: S3StateTarget, schema: str,
                 for b in range(target.num_buckets)}
     keyed_objects = _pointer_objects(pointers)
     if not keyed_objects:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     frame = read_objects(spark, target, keyed_objects, schema)
     return frame.localCheckpoint(eager=True) if eager else frame
 
