@@ -75,6 +75,10 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     from universal_data_connector_spark.session import get_spark
+    # bounded driver heap unless the caller sets one: get_spark's 48g
+    # default let a long ``-m slow`` run grow the JVM past a 16 GB
+    # host's memory until the OOM killer took it
+    os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
     s = get_spark("udc-tests", cpus=8)
     yield s
 

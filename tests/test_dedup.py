@@ -338,6 +338,26 @@ def test_connected_components_long_chain_converges(spark, monkeypatch):
     assert {r.node for r in out} == set(range(65))
 
 
+def _executed_nodes(df):
+    """Every node of ``df``'s executed physical plan, descending into
+    adaptive query stages and reused exchanges (call after an action,
+    so AQE's final plan and its metrics are in place)."""
+    def walk(p):
+        yield p
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from walk(p.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            yield from walk(p.plan())
+        elif name == "ReusedExchangeExec":
+            yield from walk(p.child())
+        else:
+            ch = p.children()
+            for i in range(ch.size()):
+                yield from walk(ch.apply(i))
+    return list(walk(df._jdf.queryExecution().executedPlan()))
+
+
 def test_gramless_docs_excluded_from_banding(spark):
     """Skew guard: docs too short to carry a shingle must produce NO
     banded rows (they can never verify above a positive Jaccard
@@ -348,9 +368,7 @@ def test_gramless_docs_excluded_from_banding(spark):
     from pyspark.sql import functions as F
 
     from universal_data_connector_spark.operators.dedup import (
-        _banded_from_grams,
         minhash_dedup_pairs,
-        shingle_hashes_df,
         simhash_candidates,
     )
 
@@ -360,41 +378,63 @@ def test_gramless_docs_excluded_from_banding(spark):
          (6, "a proper document with enough words to carry shingles")],
         "doc_id bigint, text string")
 
-    grams = shingle_hashes_df(docs)
-    banded = _banded_from_grams(grams)
-    assert (banded.select("doc_id").distinct().count() == 2)  # only 5, 6
-
-    pairs = {(r.id_1, r.id_2)
-             for r in minhash_dedup_pairs(docs, threshold=0.8).collect()}
+    out = minhash_dedup_pairs(docs, threshold=0.8)
+    pairs = {(r.id_1, r.id_2) for r in out.collect()}
     assert pairs == {(5, 6)}  # empty/short docs never pair via LSH
+    # the verify stage alone would reject the gram-less pairs (union 0),
+    # so pin the band rows themselves: each side of the band self-join
+    # explodes only docs 5 and 6, 32 bands each
+    band_rows = [n.metrics().get("numOutputRows").get().value()
+                 for n in _executed_nodes(out)
+                 if n.getClass().getSimpleName() == "GenerateExec"
+                 and "posexplode(__bands" in n.simpleString(200)]
+    assert band_rows == [2 * 32, 2 * 32], band_rows
 
     sim = {(r.id_1, r.id_2) for r in simhash_candidates(docs).collect()}
     assert (1, 2) not in sim and (1, 4) not in sim
 
 
 def test_fold_bands_batch_bitwise_equals_per_doc():
-    """The vectorized reduceat band fold (the hot path) must be
-    bitwise-identical to the per-document reference fold, including
-    empty docs (sentinel band) and across chunk boundaries."""
+    """The batch kernel (the hot path) must be bitwise-identical to the
+    per-document reference: ``_minhash_batch``'s signature matrix to
+    the per-doc affine minima, and ``_band_fold`` of it to
+    ``_fold_bands`` — including empty docs (sentinel signature), chunk
+    boundaries, and a doc larger than the chunk cap."""
     import numpy as np
 
     from universal_data_connector_spark.operators.dedup import (
+        _MERSENNE,
+        _band_fold,
+        _coeff_arrays,
         _fold_bands,
-        _fold_bands_batch,
-        _minhash_coeffs,
+        _minhash_batch,
     )
 
-    coeffs = _minhash_coeffs(128)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
+    A, B = _coeff_arrays(128)
     rng = np.random.default_rng(7)
     lists = [rng.integers(-2**62, 2**62,
                           size=int(rng.integers(0, 60))).tolist()
              for _ in range(300)]
-    lists[0] = []  # explicit empty doc
+    lists[0] = []  # explicit empty docs, first and mid-batch
+    lists[150] = []
+    lists[77] = rng.integers(-2**62, 2**62, size=200).tolist()  # > cap
+
+    def affine_min(lst):
+        h = np.asarray(lst, dtype=np.int64)
+        h = (h if h.size else np.array([_MERSENNE], dtype=np.int64)) \
+            % _MERSENNE
+        return ((A * h[None, :] + B) % _MERSENNE).min(axis=1)
+
+    ref_sig = np.stack([affine_min(l) for l in lists])
     with np.errstate(over="ignore"):
         ref = np.stack([_fold_bands(l, A, B, 32, 4) for l in lists])
-        # tiny chunk size forces many reduceat chunks incl. 1-doc ones
-        got = _fold_bands_batch(lists, A, B, 32, 4, max_chunk_grams=53)
-        full = _fold_bands_batch(lists, A, B, 32, 4)
-    assert (ref == got).all() and (ref == full).all()
+    # tiny chunk size forces many reduceat chunks incl. 1-doc ones and
+    # sends doc 77 down the column-chunked oversized path
+    for cap in (53, 1 << 17):
+        sig = _minhash_batch(lists, A, B, max_chunk_grams=cap)
+        assert sig.shape == (300, 128) and sig.dtype == np.int64
+        assert (sig == ref_sig).all()
+        folded = _band_fold(sig, 32)
+        assert folded.shape == (300, 32) and (folded == ref).all()
+    # the empty docs share one signature, hence one band key per band
+    assert (sig[0] == sig[150]).all()

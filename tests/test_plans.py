@@ -81,11 +81,12 @@ def test_agg_whole_stage_codegen(spark):
 
 
 def test_minhash_signatures_shuffle_free(spark):
-    """The MinHash signature stage is a pure projection (Arrow-batched
-    UDF over the scan): any Exchange before signatures means the plan
-    re-shuffles the full corpus text."""
+    """The MinHash signature + band stage (``shingle_band_df``, the one
+    signature map, shared with the near-dup store) is a pure map
+    (Arrow-batched mapInPandas over the scan): any aggregation before
+    signatures means the plan re-shuffles the full corpus text."""
     docs = load(spark, SF_DIR, "documents")
-    sig = od.minhash_signature_df(docs, num_hashes=16, shingle_n=3)
+    sig = od.shingle_band_df(docs, num_hashes=16, bands=4, shingle_n=3)
     p = plan_str(sig)
     # spread() repartitions by id for local parallelism; RoundRobin/hash
     # on the skinny (id, text) projection is acceptable — a shuffle of

@@ -284,8 +284,12 @@ def test_concurrent_quantile_calls_restore_conf(spark):
     """The refcounted canChangeCachedPlanOutputPartitioning toggle
     (r10 review): concurrent exact_group_percentiles calls overlap,
     all produce bit-correct results, and the LAST one out restores the
-    session's original conf value."""
+    session's original conf value. Starts are staggered so early calls
+    finish (and release their cached frames) while later calls still
+    run: equal plans once shared one cache entry, and an early
+    release made the later calls fail with KeyError."""
     import threading
+    import time
 
     from pyspark.sql import functions as F
 
@@ -306,7 +310,8 @@ def test_concurrent_quantile_calls_restore_conf(spark):
 
     results, errs = [], []
 
-    def work():
+    def work(k):
+        time.sleep(0.3 * k)
         try:
             out = exact_group_percentiles(df, ["g"], "v", [0.5], ["m"],
                                           small_input_bytes=0)
@@ -314,7 +319,7 @@ def test_concurrent_quantile_calls_restore_conf(spark):
         except Exception as exc:  # noqa: BLE001
             errs.append(exc)
 
-    threads = [threading.Thread(target=work) for _ in range(4)]
+    threads = [threading.Thread(target=work, args=(k,)) for k in range(4)]
     for t in threads:
         t.start()
     for t in threads:

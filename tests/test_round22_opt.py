@@ -182,6 +182,63 @@ def test_grouped_spread_scale_posture(spark):
     assert out.rdd.getNumPartitions() == n
 
 
+def test_cogroup_sides_of_different_sizes_share_one_count(spark, tmp_path):
+    """grouped_spread sizes the sides of a cogroup together. Sized
+    apart, a large scan (many maxPartitionBytes splits) and a small
+    one got different partition counts, and Spark added a third
+    ENSURE_REQUIREMENTS exchange re-shuffling the small side to the
+    large side's count. Pin exactly two exchanges, both the explicit
+    keyed REPARTITION_BY_NUM at one count, and the cogroup's result."""
+    import re
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from universal_data_connector_spark.operators import relational as orel
+
+    rng = np.random.default_rng(5)
+    paths = {}
+    for name, n in (("big", 150_000), ("small", 2_000)):
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"k": rng.integers(0, 500, n),
+                                 "v": rng.random(n)}), paths[name])
+
+    def sizes(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        k = left["k"].iloc[0] if len(left) else right["k"].iloc[0]
+        return pd.DataFrame({"k": [k], "nl": [len(left)],
+                             "nr": [len(right)]})
+
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "64k")
+    try:
+        big = spark.read.parquet(paths["big"])
+        small = spark.read.parquet(paths["small"])
+        a, b = orel.grouped_spread([big, small], "k")
+        out = (a.groupBy("k").cogroup(b.groupBy("k"))
+                .applyInPandas(sizes, "k long, nl long, nr long"))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = {r.k: (r.nl, r.nr) for r in out.collect()}
+    finally:
+        spark.conf.set(conf, old)
+
+    assert plan.count("Exchange ") == 2, plan
+    ex = re.findall(r"Exchange hashpartitioning\([^)]*, (\d+)\), (\w+)",
+                    plan)
+    assert [m for _, m in ex] == ["REPARTITION_BY_NUM"] * 2, plan
+    counts = {int(c) for c, _ in ex}
+    assert len(counts) == 1, plan
+    # the large side's splits set the count, not cluster parallelism
+    assert counts.pop() > spark.sparkContext.defaultParallelism, plan
+    bk = pd.read_parquet(paths["big"])["k"].value_counts()
+    sk = pd.read_parquet(paths["small"])["k"].value_counts()
+    want = {int(k): (int(bk.get(k, 0)), int(sk.get(k, 0)))
+            for k in set(bk.index) | set(sk.index)}
+    assert got == want
+
+
 def test_scaled_guard_accepts_clean_and_matches_unguarded(spark):
     """Positive control: on a clean 2-dp column the armed guard changes
     nothing — bit-identical to the unguarded scaled sum and to

@@ -483,26 +483,30 @@ def test_engine_defers_agg_state_finalize_past_bookkeeping(
 
 def test_fold_bands_batch_oversized_single_doc():
     """A single document larger than the chunk cap is column-chunked
-    (bounded memory) and still folds bitwise-identically."""
+    (bounded memory) and still signs and folds bitwise-identically to
+    the per-document reference, next to a small doc and an empty doc
+    in the same batch."""
     import numpy as np
 
     from universal_data_connector_spark.operators.dedup import (
+        _MERSENNE,
+        _band_fold,
+        _coeff_arrays,
         _fold_bands,
-        _fold_bands_batch,
-        _minhash_coeffs,
+        _minhash_batch,
     )
 
-    coeffs = _minhash_coeffs(64)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
+    A, B = _coeff_arrays(64)
     rng = np.random.default_rng(11)
     lists = [rng.integers(-2**62, 2**62, size=5000).tolist(),  # oversized
              rng.integers(-2**62, 2**62, size=10).tolist(),
              []]
     with np.errstate(over="ignore"):
         ref = np.stack([_fold_bands(l, A, B, 16, 4) for l in lists])
-        got = _fold_bands_batch(lists, A, B, 16, 4, max_chunk_grams=700)
-    assert (ref == got).all()
+    sig = _minhash_batch(lists, A, B, max_chunk_grams=700)
+    h = np.asarray(lists[0], dtype=np.int64) % _MERSENNE
+    assert (sig[0] == ((A * h[None, :] + B) % _MERSENNE).min(axis=1)).all()
+    assert (_band_fold(sig, 16) == ref).all()
 
 
 def test_lenient_casts_saturate(spark):

@@ -4,19 +4,22 @@ Four families, all shuffle-disciplined for 100 TB:
 
 * exact         — sha256(normalized text) groupBy; one shuffle on a
                   256-bit key, no skew (hash keys are uniform).
-* MinHash + LSH — shingle -> minhash signature (projection, no shuffle)
-                  -> band -> bucket self-join (shuffle on band hash;
-                  candidate set is tiny vs O(n^2)) -> exact-Jaccard
-                  verify on candidates only.
+* MinHash + LSH — shingle -> minhash signature + band fold (one map,
+                  no shuffle) -> bucket self-join (shuffle on band
+                  hash; candidate set is tiny vs O(n^2)) -> exact-
+                  Jaccard verify on candidates only.
 * SimHash       — 64-bit signature (projection) -> Hamming-ball
                   candidates via 4x16-bit pigeonhole banding.
 * n-gram Jaccard— exact all-pairs similarity *within LSH candidate sets*
                   (or, for modest data, within a blocking key).
 
-The signatures are built from Spark's `xxhash64` (deterministic across
-runs/clusters) combined with fixed affine hash families, entirely in
-higher-order array expressions — the signature stage is a pure
-projection that scans 100 TB without a single shuffle.
+Shingles are Spark ``xxhash64`` keys of word n-grams (deterministic
+across runs/clusters), computed as a pure-JVM expression tree. The
+MinHash signatures combine them with a fixed affine hash family in
+ONE numpy ``mapInPandas`` stage over the scan (``_minhash_batch`` +
+``_band_fold``) — a map with no shuffle, shared by the in-batch LSH
+pipeline and the cross-run near-dup store (``dedup_state``), so both
+band every document identically.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from universal_data_connector_spark.functions.text import (
     bind_once,
@@ -32,6 +36,11 @@ from universal_data_connector_spark.functions.text import (
     tokenize,
     word_ngrams,
 )
+from universal_data_connector_spark.operators.relational import (
+    materialize_reliable,
+    spread,
+)
+from universal_data_connector_spark.session import local_frame
 
 
 def gram_hashes(text: Column, shingle_n: int) -> Column:
@@ -50,11 +59,7 @@ def gram_hashes(text: Column, shingle_n: int) -> Column:
         tokenize(text),
         lambda toks: F.transform(word_ngrams(toks, shingle_n),
                                  lambda g: F.xxhash64(g)))
-from universal_data_connector_spark.operators.relational import (
-    materialize_reliable,
-    spread,
-)
-from universal_data_connector_spark.session import local_frame
+
 
 # Mersenne prime 2^31-1; with a,b < p and shingle hashes reduced mod p
 # first, a*h+b stays < 2^62 — no 64-bit overflow, fully portable.
@@ -85,6 +90,14 @@ def _minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return coeffs
 
 
+def _coeff_arrays(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    """The affine family as int64 (num_hashes, 1) columns (A, B)."""
+    coeffs = _minhash_coeffs(num_hashes)
+    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
+    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
+    return A, B
+
+
 def shingle_hashes_df(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", shingle_n: int = 5) -> DataFrame:
     """(id, __g array<bigint>) distinct 64-bit word-shingle hashes —
@@ -108,8 +121,9 @@ _FNV_P = np.uint64(1099511628211)
 def _fold_bands(gram_list, A, B, bands: int, r: int):
     """numpy core of the banding: `bands*r` affine minima + per-band
     FNV-1a fold over one doc's gram-hash list -> int64[bands].
-    Reference semantics for `_fold_bands_batch` (equivalence pinned in
-    tests/test_dedup.py); the batch form is the hot path."""
+    Per-document reference semantics for `_minhash_batch` +
+    `_band_fold` (equivalence pinned in tests/test_dedup.py); the batch
+    kernel is the hot path."""
     h = np.asarray(gram_list, dtype=np.int64)
     if h.size == 0:  # no shingles: sentinel bands with other empties
         h = np.array([_MERSENNE], dtype=np.int64)
@@ -122,26 +136,26 @@ def _fold_bands(gram_list, A, B, bands: int, r: int):
     return folded.astype(np.int64)
 
 
-def _fold_bands_batch(gram_lists, A, B, bands: int, r: int,
-                      max_chunk_grams: int = 1 << 17):
-    """Banding for a WHOLE Arrow batch in a few numpy dispatches
-    (VERDICT r7 item 5): all docs' gram arrays are concatenated, the
-    (num_hashes x chunk_grams) affine matrix is built once, and the
-    per-doc minima fall out of one ``np.minimum.reduceat`` over the
-    doc segment offsets — replacing a Python call + a handful of tiny
-    numpy ops PER DOCUMENT with one vectorized pass per ~128k-gram
-    chunk. The chunk cap bounds the matrix at ~128 MB for any Arrow
-    batch AND any single document: a doc larger than the cap is folded
-    alone with its gram array column-chunked (min is associative, so
-    piecewise minima compose exactly). Bitwise-identical to mapping
-    `_fold_bands` over the docs. Returns int64[(n_docs, bands)]."""
+def _minhash_batch(gram_lists, A, B, max_chunk_grams: int = 1 << 17):
+    """MinHash signatures of a WHOLE Arrow batch in a few numpy
+    dispatches -> int64[(n_docs, num_hashes)]: all docs' gram arrays
+    are concatenated, the (num_hashes x chunk_grams) affine matrix is
+    built once, and the per-doc minima fall out of one
+    ``np.minimum.reduceat`` over the doc segment offsets — one
+    vectorized pass per ~128k-gram chunk instead of a Python call per
+    document. The chunk cap bounds the matrix at ~128 MB for any Arrow
+    batch AND any single document: a doc larger than the cap is
+    reduced alone with its gram array column-chunked (min is
+    associative, so piecewise minima compose exactly). A doc with no
+    grams gets the sentinel gram ``_MERSENNE``, so empty docs share one
+    signature. The only affine-min implementation besides the
+    `_fold_bands` reference."""
     arrs = [np.asarray(lst, dtype=np.int64) for lst in gram_lists]
     sentinel = np.array([_MERSENNE], dtype=np.int64)
     arrs = [a if a.size else sentinel for a in arrs]
     lens = np.array([a.size for a in arrs], dtype=np.int64)
     n = len(arrs)
-    num_hashes = A.shape[0]
-    out = np.empty((n, bands), dtype=np.int64)
+    sig = np.empty((n, A.shape[0]), dtype=np.int64)
 
     def affine(h):
         M = A * h[None, :]          # (num_hashes, n_grams)
@@ -149,27 +163,17 @@ def _fold_bands_batch(gram_lists, A, B, bands: int, r: int,
         M %= _MERSENNE
         return M
 
-    def fold(sig_cols):
-        """(num_hashes, n_docs) minima -> (n_docs, bands) FNV folds."""
-        band_sig = sig_cols.astype(np.uint64).reshape(
-            bands, r, sig_cols.shape[1])
-        folded = np.full((bands, sig_cols.shape[1]), _FNV_OFF,
-                         dtype=np.uint64)
-        for j in range(r):
-            folded = (folded ^ band_sig[:, j, :]) * _FNV_P
-        return folded.T.astype(np.int64)
-
     start = 0
     while start < n:
         if lens[start] > max_chunk_grams:
             # oversized single doc: chunk its grams column-wise and
             # merge the piecewise affine minima
-            sig = np.full((num_hashes,), _MERSENNE, dtype=np.int64)
+            row = sig[start]
+            row[:] = _MERSENNE
             a = arrs[start]
             for lo in range(0, a.size, max_chunk_grams):
                 piece = a[lo:lo + max_chunk_grams] % _MERSENNE
-                np.minimum(sig, affine(piece).min(axis=1), out=sig)
-            out[start] = fold(sig[:, None])[0]
+                np.minimum(row, affine(piece).min(axis=1), out=row)
             start += 1
             continue
         end, total = start, 0
@@ -179,62 +183,24 @@ def _fold_bands_batch(gram_lists, A, B, bands: int, r: int,
         h = np.concatenate(arrs[start:end]) % _MERSENNE
         offs = np.zeros(end - start, dtype=np.int64)
         np.cumsum(lens[start:end - 1], out=offs[1:])
-        sig = np.minimum.reduceat(affine(h), offs, axis=1)
-        out[start:end] = fold(sig)
+        sig[start:end] = np.minimum.reduceat(affine(h), offs, axis=1).T
         start = end
-    return out
+    return sig
 
 
-def _banded_from_grams(grams: DataFrame, id_col: str = "doc_id",
-                       num_hashes: int = 128, bands: int = 32) -> DataFrame:
-    """Banded minhash rows (id, band_idx, band_hash) from shingle-hash
-    arrays. Shuffle-free: a pure map.
-
-    One ``mapInPandas`` pass computes the band minima AND emits the
-    exploded rows. Exploding a pandas-UDF output column with
-    ``posexplode`` instead puts the UDF under a Generate, and the
-    optimizer's inferred generator filters (notnull/size on the
-    generator input) re-reference the UDF — duplicating the banding
-    work per row and, in some session states, leaving a raw PythonUDF
-    in a non-extractable plan position that fails at runtime with
-    INTERNAL_ERROR "Cannot evaluate expression". mapInPandas is a
-    single opaque Arrow node: nothing to infer through, one eval.
-
-    Gram-less docs (< shingle_n words) are EXCLUDED from banding: an
-    empty shingle set can never verify above a positive Jaccard
-    threshold (union = 0 -> jaccard 0), so banding them is wasted
-    work — and at corpus scale it is a skew bomb: every empty doc
-    would land in the SAME bucket in all `bands` bands, making the
-    band self-join quadratic in the number of empty docs. Identical
-    empty docs are exact_dedup's job, not LSH's."""
-    from pyspark.sql import types as T
-
-    coeffs = _minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
+def _band_fold(sig, bands: int):
+    """int64[(n_docs, num_hashes)] signatures -> int64[(n_docs, bands)]
+    LSH band keys: each signature is sliced into ``bands`` runs of
+    r = num_hashes / bands positions, and each run is FNV-1a folded
+    (uint64 wraparound is part of the hash)."""
+    n, num_hashes = sig.shape
     r = num_hashes // bands
-    id_type = grams.schema[id_col].dataType
-    out_schema = T.StructType([
-        T.StructField(id_col, id_type),
-        T.StructField("band_idx", T.IntegerType()),
-        T.StructField("band_hash", T.LongType()),
-    ])
-    band_range = np.arange(bands, dtype=np.int32)
-
-    def emit(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            with np.errstate(over="ignore"):
-                folded = _fold_bands_batch(pdf["__g"], A, B, bands, r)
-            yield pd.DataFrame({
-                id_col: np.repeat(pdf[id_col].to_numpy(), bands),
-                "band_idx": np.tile(band_range, len(pdf)),
-                "band_hash": folded.reshape(-1)})
-
-    return (grams.filter(F.size("__g") > 0)
-                 .select(F.col(id_col), "__g")
-                 .mapInPandas(emit, out_schema))
+    band_sig = sig.astype(np.uint64).reshape(n, bands, r)
+    folded = np.full((n, bands), _FNV_OFF, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for j in range(r):
+            folded = (folded ^ band_sig[:, :, j]) * _FNV_P
+    return folded.astype(np.int64)
 
 
 def shingle_band_df(df: DataFrame, text_col: str = "text",
@@ -254,12 +220,7 @@ def shingle_band_df(df: DataFrame, text_col: str = "text",
     extra Arrow transfer of the gram arrays but keeps the whole
     pipeline a single map over the scan — no shuffle at any scale.
     """
-    from pyspark.sql import types as T
-
-    coeffs = _minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-    r = num_hashes // bands
+    A, B = _coeff_arrays(num_hashes)
     grams = shingle_hashes_df(df, text_col, id_col, shingle_n)
     out_schema = T.StructType([
         T.StructField(id_col, grams.schema[id_col].dataType),
@@ -269,122 +230,11 @@ def shingle_band_df(df: DataFrame, text_col: str = "text",
 
     def emit(batches):
         for pdf in batches:
-            with np.errstate(over="ignore"):
-                folded = _fold_bands_batch(pdf["__g"], A, B, bands, r)
+            folded = _band_fold(_minhash_batch(pdf["__g"], A, B), bands)
             yield pd.DataFrame({id_col: pdf[id_col], "__g": pdf["__g"],
                                 "__bands": list(folded)})
 
     return grams.mapInPandas(emit, out_schema)
-
-
-def minhash_signature_df(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", num_hashes: int = 128,
-                         shingle_n: int = 5) -> DataFrame:
-    """MinHash signatures as one shuffle-free map.
-
-    Shingling is the pure-JVM ``shingle_hashes_df`` expression tree
-    (tokenize -> distinct word n-grams -> xxhash64); the `num_hashes`
-    affine permutations + min-reduction run as one numpy broadcast per
-    document in an Arrow batch — exact integer math (after
-    `% _MERSENNE`, a, h < 2^31 so a*h + b < 2^63, no overflow),
-    deterministic across runs/executors. This split — JVM for string
-    work, numpy for the 128-way min — beat both the all-Python form
-    (per-gram hashing dominated) and the all-JVM form (128 interpreted
-    min-aggregates per row). No shuffle at all: at 100 TB the
-    signature stage is a pure map over the scan.
-
-    The Python stage is ``mapInPandas``, NOT a pandas_udf projection:
-    projection collapse would inline the λ-bound gram expression into
-    the UDF argument, and a PythonUDF whose argument carries nested
-    lambda variables intermittently fails extraction (canonicalization
-    of NamedLambdaVariable), leaving a raw PythonUDF the executor
-    cannot evaluate. mapInPandas takes the gram COLUMN as Arrow input
-    — nothing to extract.
-
-    Docs with no shingles (< shingle_n words) get a sentinel shingle so
-    they band deterministically with other empty docs only.
-
-    Output: (id_col, sig array<bigint> of length num_hashes).
-    """
-    from pyspark.sql import types as T
-
-    coeffs = _minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-    grams = shingle_hashes_df(df, text_col, id_col, shingle_n)
-    out_schema = T.StructType([
-        T.StructField(id_col, grams.schema[id_col].dataType),
-        T.StructField("sig", T.ArrayType(T.LongType())),
-    ])
-
-    def emit(batches):
-        for pdf in batches:
-            sigs = []
-            for lst in pdf["__g"]:
-                h = np.asarray(lst, dtype=np.int64)
-                if h.size == 0:
-                    h = np.array([_MERSENNE], dtype=np.int64)
-                h = h % _MERSENNE
-                sigs.append(((A * h[None, :] + B) % _MERSENNE).min(axis=1))
-            yield pd.DataFrame({id_col: pdf[id_col], "sig": sigs})
-
-    return grams.mapInPandas(emit, out_schema)
-
-
-def minhash_candidates(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 128,
-                       bands: int = 32, shingle_n: int = 5) -> DataFrame:
-    """LSH candidate pairs (id_1 < id_2) via banded minhash signatures.
-
-    rows-per-band = num_hashes / bands; a pair is a candidate iff any
-    band's sub-signature matches exactly. The only shuffle is the
-    groupBy on (band_idx, band_hash) — bucket sizes stay small because
-    band hashes of non-near-dup docs are uniform.
-    """
-    grams = shingle_hashes_df(df, text_col, id_col, shingle_n)
-    return minhash_candidates_from_grams(grams, id_col, num_hashes, bands)
-
-
-def minhash_candidates_from_grams(grams: DataFrame, id_col: str = "doc_id",
-                                  num_hashes: int = 128,
-                                  bands: int = 32) -> DataFrame:
-    """LSH candidate pairs from precomputed shingle-hash arrays."""
-    banded = _banded_from_grams(grams, id_col, num_hashes, bands)
-    # Materialize the banded signatures eagerly: the self-join's two
-    # sides otherwise RACE to compute the unpopulated cache in parallel
-    # (AQE materializes both join-side stages concurrently), running
-    # the whole signature pipeline twice. Banded signatures are tiny
-    # relative to the corpus (n_docs x bands skinny rows), so eager
-    # checkpointing is safe at any scale.
-    banded = banded.localCheckpoint(eager=True)
-    a, b2 = banded.alias("a"), banded.alias("b")
-    return (a.join(b2, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_hash") == F.col("b.band_hash"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("id_1"),
-                     F.col(f"b.{id_col}").alias("id_2"))
-             .distinct())
-
-
-def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", shingle_n: int = 5,
-                   threshold: float = 0.8) -> DataFrame:
-    """Exact shingle-set Jaccard on candidate pairs only.
-
-    Joins the (small) candidate pair set back to the shingle arrays and
-    verifies with array_intersect — the classic LSH verify stage: exact
-    where it matters, never O(n^2). Shingles are compared as 64-bit
-    xxhash64 keys, not strings: set Jaccard over the keys equals
-    string Jaccard up to a ~2^-64 per-pair collision, and long-array
-    intersection shuffles/compares a fraction of the bytes.
-    """
-    grams = shingle_hashes_df(df, text_col, id_col, shingle_n)
-    # Both pair sides read the shingle arrays; materialize eagerly so
-    # tokenization runs exactly once (shingling dominates this
-    # operator's cost, and lazy caches race under AQE). Corpus-sized ->
-    # recoverable persistence, not localCheckpoint.
-    grams = materialize_reliable(grams)
-    return jaccard_verify_grams(grams, pairs, id_col, threshold)
 
 
 def jaccard_verify_grams(grams: DataFrame, pairs: DataFrame,
@@ -427,9 +277,12 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
     gb = shingle_band_df(df, text_col, id_col, num_hashes, bands, shingle_n)
     gb = materialize_reliable(gb)  # corpus-sized gram arrays
     grams = gb.select(id_col, "__g")
-    # gram-less docs can't verify above a positive threshold — keep
-    # them out of the band join (skew guard, see _banded_from_grams);
-    # __bands here is a cached ATTRIBUTE, so the explode is safe
+    # Skew guard: gram-less docs (< shingle_n words) can never verify
+    # above a positive threshold (union = 0 -> jaccard 0), and their
+    # shared sentinel signature would put every one of them in the
+    # SAME bucket of all `bands` bands — a band self-join quadratic in
+    # the empty-doc count. Identical empty docs are exact_dedup's job.
+    # __bands here is a cached ATTRIBUTE, so the explode is safe.
     banded = gb.filter(F.size("__g") > 0).select(
         F.col(id_col),
         F.posexplode("__bands").alias("band_idx", "band_hash"))
@@ -612,8 +465,6 @@ def simhash64(text: Column | str, shingle_n: int = 2) -> Column:
     slower; the all-Python form spent its time hashing strings). Docs
     with no shingles sign to all-zero bits.
     """
-    from pyspark.sql import types as T
-
     if isinstance(text, str):
         text = F.col(text)
     # Deliberately NOT gram_hashes()/bind_once: this expression is the
@@ -722,8 +573,6 @@ def _require_integral_ids(df: DataFrame, cols: list[str],
     no row canonical with no error). String ids: pre-map with
     ``F.xxhash64(col)`` (stable int64, ~2^-64 collision per pair) and
     join the originals back afterwards."""
-    from pyspark.sql import types as T
-
     ok = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     for c in cols:
         dt = df.schema[c].dataType

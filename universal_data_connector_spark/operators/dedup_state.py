@@ -360,27 +360,21 @@ def _sig_band_df(df: DataFrame, text_col: str, id_col: str,
                  num_hashes: int, bands: int,
                  shingle_n: int) -> DataFrame:
     """(id, __sig, __bands) in ONE map over the scan: the pure-JVM
-    shingle expression feeds a mapInPandas that computes the affine-min
-    signature AND its per-band FNV fold together (the same math as
-    ``dedup._fold_bands`` — signature sliced into ``bands`` rows of
-    ``r``, FNV-1a over each slice), so the cross-run store and the
-    in-batch LSH pipeline band identically."""
-    import numpy as np
+    shingle expression feeds a mapInPandas that runs the in-batch LSH
+    pipeline's own kernel (``dedup._minhash_batch`` + ``_band_fold``),
+    so the cross-run store and ``dedup.shingle_band_df`` band
+    identically by construction."""
     import pandas as pd
     from pyspark.sql import types as T
 
     from universal_data_connector_spark.operators.dedup import (
-        _FNV_OFF,
-        _FNV_P,
-        _MERSENNE,
-        _minhash_coeffs,
+        _band_fold,
+        _coeff_arrays,
+        _minhash_batch,
         shingle_hashes_df,
     )
 
-    coeffs = _minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-    r = num_hashes // bands
+    A, B = _coeff_arrays(num_hashes)
     grams = shingle_hashes_df(df, text_col, id_col, shingle_n)
     out_schema = T.StructType([
         T.StructField(id_col, grams.schema[id_col].dataType),
@@ -390,22 +384,9 @@ def _sig_band_df(df: DataFrame, text_col: str, id_col: str,
 
     def emit(batches):
         for pdf in batches:
-            sigs, folds = [], []
-            with np.errstate(over="ignore"):
-                for lst in pdf["__g"]:
-                    h = np.asarray(lst, dtype=np.int64)
-                    if h.size == 0:
-                        h = np.array([_MERSENNE], dtype=np.int64)
-                    h = h % _MERSENNE
-                    sig = ((A * h[None, :] + B) % _MERSENNE).min(axis=1)
-                    folded = np.full(bands, _FNV_OFF, dtype=np.uint64)
-                    band_sig = sig.astype(np.uint64).reshape(bands, r)
-                    for j in range(r):
-                        folded = (folded ^ band_sig[:, j]) * _FNV_P
-                    sigs.append(sig)
-                    folds.append(folded.astype(np.int64))
-            yield pd.DataFrame({id_col: pdf[id_col], "__sig": sigs,
-                                "__bands": folds})
+            sig = _minhash_batch(pdf["__g"], A, B)
+            yield pd.DataFrame({id_col: pdf[id_col], "__sig": list(sig),
+                                "__bands": list(_band_fold(sig, bands))})
 
     return grams.mapInPandas(emit, out_schema)
 

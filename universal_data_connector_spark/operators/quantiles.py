@@ -59,11 +59,13 @@ from __future__ import annotations
 
 import math
 import threading
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from universal_data_connector_spark.operators.relational import estimated_bytes
 from universal_data_connector_spark.session import local_frame
 
 _LOW_BITS = (1 << 33) - 1  # monotonically_increasing_id layout
@@ -121,18 +123,6 @@ def _cached_part_exit(spark) -> None:
                     pass  # session already stopped
 
 
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Optimizer size estimate of ``df`` (driver-side, no job). For
-    file scans this is the input file bytes scaled by pruning; for
-    derived plans Spark propagates a coarse upper-ish bound — exactly
-    the right signal for a conservative small-input switch."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return None
-
-
 def _small_input_percentiles(vals: DataFrame, g: list[str],
                              ps: list[float], max_meta_rows: int):
     """Small-input fast path: ONE eager percentile-aggregate job.
@@ -162,11 +152,10 @@ def _small_input_percentiles(vals: DataFrame, g: list[str],
 # count collect, pick join) — measured ~0.7-1.2 s of fixed overhead
 # per call at local sf0.1 vs milliseconds for one tiny aggregate. The
 # default (64 MB) bounds the worst case (one group owning every row)
-# to one aggregation buffer of a few million doubles; production
-# deployments tune via env, and the estimate grows with the data so
-# the 100 TB regime always takes rank-selection.
-_SMALL_INPUT_BYTES_ENV = "UDC_PCTL_AGG_MAX_BYTES"
-_SMALL_INPUT_BYTES_DEFAULT = 64 << 20
+# to one aggregation buffer of a few million doubles; the
+# estimate grows with the data, so the 100 TB regime always takes
+# rank-selection.
+_SMALL_INPUT_BYTES = 64 << 20
 
 
 def exact_group_percentiles(df: DataFrame, group_cols: list[str],
@@ -214,11 +203,9 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
     vals = (df.select(*g, vcol.cast("double").alias("__v"))
               .filter(F.col("__v").isNotNull()))
     if small_input_bytes is None:
-        import os
-        small_input_bytes = int(os.environ.get(
-            _SMALL_INPUT_BYTES_ENV, _SMALL_INPUT_BYTES_DEFAULT))
+        small_input_bytes = _SMALL_INPUT_BYTES
     if small_input_bytes > 0:
-        est = _estimated_bytes(vals)
+        est = estimated_bytes(vals)
         if est is not None and est <= small_input_bytes:
             rows = _small_input_percentiles(vals, g, ps, max_meta_rows)
             if rows is not None:
@@ -253,13 +240,21 @@ def exact_group_percentiles(df: DataFrame, group_cols: list[str],
     # exchange ELIGIBLE for AQE's coalescer (an explicit count pins
     # it), so undersized slices merge at runtime instead of paying
     # per-slice overheads
+    # The per-call "__call" literal keeps this call's cache entry
+    # private. Spark's CacheManager shares one entry between EQUAL
+    # plans, so concurrent calls on the same input shared it, and the
+    # first call to finish unpersisted it under the others; their pick
+    # join then re-planned `indexed` with freshly sampled range bounds
+    # that no longer matched the slice metadata (KeyError on a missing
+    # endpoint).
     indexed = (salted.repartitionByRange(*g, "__v", "__salt")
                      .sortWithinPartitions(*g, "__v")
                      .withColumn("__mid", mid)
                      .select(*g, "__v",
                              F.shiftright("__mid", 33).alias("__pid"),
                              F.col("__mid").bitwiseAND(F.lit(_LOW_BITS))
-                              .alias("__pofs"))
+                              .alias("__pofs"),
+                             F.lit(uuid.uuid4().hex).alias("__call"))
                      .persist(StorageLevel.DISK_ONLY))
     g_fields = [f for f in df.select(*g).schema.fields]
     # AQE may only coalesce an exchange that feeds a CACHED plan when

@@ -3,10 +3,11 @@
 Everything stays declarative so Catalyst picks the physical strategy
 (broadcast vs sort-merge vs shuffled-hash; partial+final aggregation;
 WholeStageCodegen). Helpers here add the two things Catalyst can't
-infer: explicit strategy *intent* (broadcast hints for dimension
-tables) and numeric determinism (decimal-exact sums, so results are
-bit-identical across engines and across partition orders — a plain
-double sum is order-dependent and shuffles reorder partitions).
+infer: explicit physical *intent* (scan fan-out, grouped-dispatch
+width, recoverable materialization) and numeric determinism
+(decimal-exact sums, so results are bit-identical across engines and
+across partition orders — a plain double sum is order-dependent and
+shuffles reorder partitions).
 """
 
 from __future__ import annotations
@@ -134,6 +135,23 @@ def exact_avg_scaled(col: Column | str) -> Column:
     return exact_sum_scaled(c) / F.count(c)
 
 
+# materialize_reliable's in-memory ceiling (optimizer estimate).
+_MAT_MEMORY_MAX_BYTES = 256 << 20
+
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """Optimizer size estimate of ``df`` (driver-side, no job), or None
+    when the plan has none. For file scans this is the input file
+    bytes scaled by pruning; for derived plans Spark propagates a
+    coarse upper-ish bound — the right signal for a conservative
+    small-input switch."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 def materialize_reliable(df: DataFrame) -> DataFrame:
     """Eagerly materialize a corpus-scale intermediate, recoverably.
 
@@ -167,31 +185,23 @@ def materialize_reliable(df: DataFrame) -> DataFrame:
     on one thread can never unpersist frames a concurrently-running
     job (PipelineManager worker threads) still depends on.
     """
-    import os
-
     from pyspark import StorageLevel
 
     # Storage level by estimated input size (same conservative switch
     # as the percentile fast path): DISK_ONLY is the right call for
     # corpus-scale frames — it keeps 100 TB-proportional blocks out of
     # executor heap — but at small scale it taxes EVERY consumer with
-    # a serialize-to-disk + read-back round trip. Below the threshold
-    # (optimizer sizeInBytes estimate; unknown or over-threshold stays
+    # a serialize-to-disk + read-back round trip. At or below
+    # _MAT_MEMORY_MAX_BYTES (unknown or over-threshold estimates stay
     # DISK_ONLY, so the failure mode of a bad estimate is only the old
     # behavior) the frame is MEMORY_AND_DISK: small frames live in the
     # bounded storage pool, anything unexpected spills via LRU. The
     # estimate grows with the data, so the 100 TB regime always takes
-    # DISK_ONLY. Tune via UDC_MAT_MEMORY_MAX_BYTES (0 disables).
-    mem_max = int(os.environ.get("UDC_MAT_MEMORY_MAX_BYTES", 256 << 20))
-    level = StorageLevel.DISK_ONLY
-    if mem_max > 0:
-        try:
-            est = int(df._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes())
-        except Exception:
-            est = None
-        if est is not None and est <= mem_max:
-            level = StorageLevel.MEMORY_AND_DISK
+    # DISK_ONLY.
+    est = estimated_bytes(df)
+    level = (StorageLevel.MEMORY_AND_DISK
+             if est is not None and est <= _MAT_MEMORY_MAX_BYTES
+             else StorageLevel.DISK_ONLY)
     df = df.persist(level)
     df.count()  # force: populate every partition before consumers run
     _pin_sink().append(df)
@@ -350,6 +360,36 @@ def _max_partition_bytes(spark) -> int:
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
 
 
+def _split_estimate(dfs: list[DataFrame], stop_at: int | None = None) -> int:
+    """Scan-width estimate of the frames ``dfs``: the distinct input
+    files they read, split at maxPartitionBytes — metadata only, never
+    a plan->RDD conversion (``df.rdd.getNumPartitions()`` materializes
+    an RDD plan per call, defeating lazy reuse and loading the driver
+    when operators compose). Bytes-based splits are an upper bound on
+    real tasks (single-row-group files never split), so a file counts
+    as extra splits only beyond its first; a non-local or unreadable
+    file counts one, and a file several frames read counts once. 0
+    means no file scan (in-memory or post-shuffle plans). Counting
+    stops once it reaches ``stop_at``."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    max_bytes = _max_partition_bytes(dfs[0].sparkSession)
+    est = 0
+    for f in dict.fromkeys(f for d in dfs for f in d.inputFiles()):
+        if f.startswith("file:"):
+            try:
+                size = os.path.getsize(unquote(urlparse(f).path))
+                est += max(1, -(-size // max_bytes))
+            except OSError:
+                est += 1
+        else:
+            est += 1
+        if stop_at is not None and est >= stop_at:
+            break
+    return est
+
+
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Raise scan parallelism before a compute-heavy projection.
 
@@ -362,41 +402,19 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     is already wide (the 100 TB case: thousands of files/row groups)
     this is a no-op.
 
-    The width estimate comes from the scan's file listing + the
-    maxPartitionBytes split arithmetic — metadata only, never a
-    plan->RDD conversion (``df.rdd.getNumPartitions()`` materializes an
-    RDD plan per call, defeating lazy reuse and loading the driver when
-    operators compose). Non-scan inputs (no files: in-memory or
-    post-shuffle plans) are returned unchanged: they already carry
+    The width estimate is ``_split_estimate``'s file-listing
+    arithmetic. Non-scan inputs (no files: in-memory or post-shuffle
+    plans) are returned unchanged: they already carry
     defaultParallelism or shuffle.partitions width.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if not files:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    est = _split_estimate([df], stop_at=target)
+    if est == 0 or est >= target:
         return df
-    max_bytes = _max_partition_bytes(spark)
-    est = 0
-    for f in files:
-        if f.startswith("file:"):
-            try:
-                import os
-                from urllib.parse import unquote, urlparse
-                size = os.path.getsize(unquote(urlparse(f).path))
-                # bytes-based splits are an upper bound on real tasks
-                # (single-row-group files never split), so count a file
-                # as extra splits only beyond the first
-                est += max(1, -(-size // max_bytes))
-            except OSError:
-                est += 1
-        else:
-            est += 1
-        if est >= target:
-            return df
     return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
 
 
-def grouped_spread(df: DataFrame, *key_cols: str) -> DataFrame:
+def grouped_spread(dfs: DataFrame | list[DataFrame], *key_cols: str):
     """Partition for a grouped Python dispatch (``groupBy().
     applyInPandas`` / ``cogroup``): hash-partition on the group key at
     ``max(defaultParallelism, input-split estimate)`` partitions.
@@ -411,36 +429,25 @@ def grouped_spread(df: DataFrame, *key_cols: str) -> DataFrame:
     exempt from AQE coalescing and satisfies the grouped operator's
     ClusteredDistribution requirement, so no second exchange appears.
 
-    Scale posture: the count grows with the input (file-split estimate,
-    same metadata arithmetic as ``spread``) and never drops below
+    A list of frames (the sides of a cogroup) is sized TOGETHER: the
+    estimate covers the files of all sides and every side gets that
+    one count, so the cogroup's co-partitioning requirement is met.
+    Sized apart, a large and a small side got different counts and
+    Spark added a third exchange re-shuffling the small side to the
+    large side's count. Returns a list for a list, a frame for a frame.
+
+    Scale posture: the count grows with the input (``_split_estimate``,
+    the same metadata arithmetic as ``spread``) and never drops below
     cluster parallelism — at 100 TB the estimate dominates and the
     exchange carries exactly the bytes the groupBy shuffle already
     moved; only the pathological small-bytes/many-groups corner
     changes. Non-scan inputs fall back to defaultParallelism: callers
     should apply this directly to the scan-side projection."""
-    spark = df.sparkSession
-    import os as _os
-    from urllib.parse import unquote, urlparse
-
-    target = spark.sparkContext.defaultParallelism
-    max_bytes = _max_partition_bytes(spark)
-    est = 0
-    for f in df.inputFiles():
-        if f.startswith("file:"):
-            try:
-                size = _os.path.getsize(unquote(urlparse(f).path))
-                est += max(1, -(-size // max_bytes))
-            except OSError:
-                est += 1
-        else:
-            est += 1
-    return df.repartition(max(target, est), *key_cols)
-
-
-def broadcast_dim(df: DataFrame) -> DataFrame:
-    """Mark a dimension table broadcast-able (skips the shuffle on the
-    fact side; the right call whenever the dim fits in executor memory)."""
-    return F.broadcast(df)
+    frames = [dfs] if isinstance(dfs, DataFrame) else list(dfs)
+    target = frames[0].sparkSession.sparkContext.defaultParallelism
+    n = max(target, _split_estimate(frames))
+    out = [d.repartition(n, *key_cols) for d in frames]
+    return out[0] if isinstance(dfs, DataFrame) else out
 
 
 def top_k_per_group(df: DataFrame, partition_cols: list[str],

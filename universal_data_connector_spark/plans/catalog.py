@@ -470,7 +470,7 @@ def join_broadcast(spark, sf_dir):
     the 100 TB-correct plan for fact x dimension."""
     li, p = load(spark, sf_dir, "lineitem"), load(spark, sf_dir, "part")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (li.join(orel.broadcast_dim(p), li.l_partkey == p.p_partkey)
+    return (li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
               .groupBy(F.col("p_brand").alias("brand"))
               .agg(F.count("*").alias("n_items"),
                    orel.exact_sum_scaled(revenue).alias("revenue")))
@@ -542,7 +542,7 @@ def join_range_theta(spark, sf_dir):
     cond = ((li.l_partkey == p.p_partkey)
             & (li.l_quantity >= p.p_size - 2)
             & (li.l_quantity <= p.p_size + 2))
-    return (li.join(orel.broadcast_dim(p), cond)
+    return (li.join(F.broadcast(p), cond)
               .groupBy(F.col("p_brand").alias("brand"))
               .agg(F.count("*").alias("n_matches")))
 
@@ -2499,7 +2499,7 @@ def stream_static_enrich_join(spark, sf_dir):
     stream = (spark.readStream.schema(raw_schema)
               .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    enriched = stream.join(orel.broadcast_dim(cust),
+    enriched = stream.join(F.broadcast(cust),
                            stream.user_id == cust.c_custkey)
     agg = (enriched.groupBy(F.col("c_mktsegment").alias("segment"))
            .agg(F.count("*").cast("bigint").alias("n_events"),
@@ -2657,7 +2657,7 @@ def text_unigram_logprob(spark, sf_dir):
     tok = orel.materialize_reliable(tok)
     counts = tok.groupBy("token").agg(F.count("*").alias("n"))
     total = tok.count()
-    return (tok.join(orel.broadcast_dim(counts), "token")
+    return (tok.join(F.broadcast(counts), "token")
                .groupBy("doc_id")
                .agg(F.count("*").cast("bigint").alias("n_tokens"),
                     F.round(F.sum(F.log(F.col("n") / F.lit(total))), 4)
@@ -4009,13 +4009,13 @@ def cogroup_asof_merge(spark, sf_dir):
     # grouped_spread (r22): same AQE small-bytes coalescing pathology
     # as agg_grouped_mad_pandas — both cogroup sides collapsed to one
     # post-shuffle task, serializing the per-group Arrow dispatch on a
-    # single core. Both sides repartition to the same count on the
-    # same key, so the cogroup's co-partitioning requirement is met
-    # without a second exchange; per-group results are
-    # partitioning-independent.
-    return (orel.grouped_spread(clicks, "user_id").groupBy("user_id")
-            .cogroup(orel.grouped_spread(purchases, "user_id")
-                     .groupBy("user_id"))
+    # single core. The sides are sized together, so both repartition
+    # to the same count on the same key and the cogroup's
+    # co-partitioning requirement is met without a third exchange;
+    # per-group results are partitioning-independent.
+    clicks, purchases = orel.grouped_spread([clicks, purchases], "user_id")
+    return (clicks.groupBy("user_id")
+            .cogroup(purchases.groupBy("user_id"))
             .applyInArrow(
                 merge,
                 "click_id bigint, user_id bigint, purchase_value double"))

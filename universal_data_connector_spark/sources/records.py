@@ -151,11 +151,3 @@ def csv_blob_to_records(df: DataFrame, schema: T.StructType,
             *[fc.with_default(F.col(f.name), _TYPE_NAMES[f.dataType]).alias(f.name)
               for f in schema.fields])
     return out
-
-
-def field_value(column_name: str) -> Column:
-    """Case-insensitive field lookup on an exploded row's ``__fields``
-    map (filter T1's header matching, ``PipelineBuilder.java:56-66``).
-    Unbound column — resolve it against a frame produced by
-    ``explode_csv_rows``."""
-    return F.col("__fields").getItem(column_name.strip().lower())

@@ -79,7 +79,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col in _TS_COLS.get(name, ()):
         df = watermarkable_ts(df, col)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load(spark, sf_dir, n) for n in (names or TABLES))
